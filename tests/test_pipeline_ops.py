@@ -111,6 +111,42 @@ def test_dedup_clusters_long_chain(spark):
     pairs = spark.createDataFrame(edges, "a string, b string")
     got = {(r["member"], r["cluster"]) for r in dd.dedup_clusters(pairs).collect()}
     assert got == {(f"n{i}", "n0") for i in range(6)}
+    # initialization runs round 1, so max_iter=0 returns round-1 labels:
+    # each node's min over itself and its neighbors
+    one = {
+        (r["member"], r["cluster"])
+        for r in dd.dedup_clusters(pairs, max_iter=0).collect()
+    }
+    assert one == {("n0", "n0")} | {(f"n{i}", f"n{i-1}") for i in range(1, 6)}
+
+
+def test_bucket_pairs_expansion(spark):
+    """_bucket_pairs emits every x-before-y pair of the member array in
+    array order (none for a singleton); ``keep`` drops pairs inside the
+    expansion, leaving no NULL holes."""
+    df = spark.createDataFrame(
+        [("b1", ["a"]), ("b2", ["a", "b"]), ("b4", ["a", "b", "c", "d"])],
+        "bucket string, ms array<string>",
+    )
+    emit = lambda x, y: F.struct(x.alias("x"), y.alias("y"))  # noqa: E731
+
+    def expand(keep=None):
+        rows = df.select(
+            "bucket", dd._bucket_pairs(F.col("ms"), emit, keep).alias("p")
+        ).collect()
+        return {r["bucket"]: [(p["x"], p["y"]) for p in r["p"]] for r in rows}
+
+    assert expand() == {
+        "b1": [],
+        "b2": [("a", "b")],
+        "b4": [("a", "b"), ("a", "c"), ("a", "d"),
+               ("b", "c"), ("b", "d"), ("c", "d")],
+    }
+    assert expand(lambda x, y: (x != "b") & (y != "c")) == {
+        "b1": [],
+        "b2": [("a", "b")],
+        "b4": [("a", "b"), ("a", "d"), ("c", "d")],
+    }
 
 
 def test_simhash_neardup(spark):
@@ -138,6 +174,19 @@ def test_embedding_neardup_and_lsh(spark):
     lsh = {(r["a"], r["b"]) for r in dd.embedding_neardup_lsh(df, threshold=0.95, n_planes=4).collect()}
     # sign-LSH: identical-direction vectors always share every bucket
     assert lsh == {(1, 2)}
+
+
+def test_embedding_pair_cos_caps_driver_collect(spark, monkeypatch):
+    """The exhaustive scorer collects at most the cap; one vector more
+    raises and points at the LSH path."""
+    df = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[1.0, float(i)]) for i in range(4)]
+    )
+    monkeypatch.setattr(dd, "_PAIR_COS_MAX_ROWS", 4)
+    assert dd.embedding_pair_cos(df, threshold=0.9, dim=2).count() > 0
+    monkeypatch.setattr(dd, "_PAIR_COS_MAX_ROWS", 3)
+    with pytest.raises(ValueError, match="embedding_neardup_lsh"):
+        dd.embedding_pair_cos(df, threshold=0.9, dim=2)
 
 
 def test_embedding_lsh_multitable_recall_monotone(spark):

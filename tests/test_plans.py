@@ -192,7 +192,7 @@ def test_form_parse_entries_staged_once(spark):
     """parse_query_column must evaluate the entries-array transform ONCE
     per row, in its own projection — if CollapseProject ever inlines it
     into the per-field lookups, the split/decode work multiplies by the
-    number of ruled fields (the shingle_frame PERF trap)."""
+    number of ruled fields (the hashed_shingle_frame staging trap)."""
     from pyspark.sql import Row
     from validate_spark.sources.formsrc import parse_query_column
 
@@ -318,7 +318,7 @@ def test_dedup_clusters_plan_stays_bounded(spark):
 def test_annotate_repetition_staged_split(spark):
     """annotate_repetition must evaluate the token split ONCE per row in
     its own projection — inlined, every signal column re-splits (the
-    shingle_frame/parse_query trap, third occurrence)."""
+    hashed_shingle_frame/parse_query trap, third occurrence)."""
     from validate_spark.operators.textstats import annotate_repetition
 
     docs = spark.read.parquet(DOCS)

@@ -1,36 +1,39 @@
 """Deduplication operators for training-data pipelines.
 
-Five tiers, each a different cost/recall point, all shuffle-bounded,
-plus the pipeline-closing steps (connected components → retention):
+The bucketed near-duplicate pair producers share one pipeline:
 
-1. **Exact** — md5 fingerprint of normalized text → one hash-aggregate.
-   md5 keys are uniform, so the shuffle never skews; 10^12 rows is one
-   map-side-combined groupBy.
-2. **MinHash + LSH** — char-shingle → minhash signature → band buckets →
-   candidate pairs only within buckets → exact-Jaccard verify. The
-   self-join is replaced by ``collect_list`` within a bucket (bounded by
-   ``max_bucket``), so the worst case is O(bucket²) per bucket, never
-   O(n²) — the textbook LSH bound.
-3. **SimHash** — 64-bit token-vote signature (vectorized pandas UDF,
-   Arrow-batched — the one place Python earns its transfer cost), then
-   Hamming-ball candidate pairs via 4×16-bit chunk buckets (any pair
-   within Hamming distance 3 shares ≥1 exact chunk — pigeonhole).
-4. **n-gram Jaccard** — exact-score similarity join via prefix
-   filtering (AllPairs/PPJoin family, rarest-first global gram order);
-   no signatures, recall contract documented on the function.
-5. **Embedding near-dup** — cosine ≥ τ pairs; exact O(n²) only inside
-   LSH sign-buckets (deterministic hyperplanes), brute-force variant for
-   oracle-exact small-scale verification.
+1. **Stage** — the producer builds its key/set frame: hashed char
+   shingles (``hashed_shingle_frame``), word n-grams
+   (``word_ngram_frame``), SimHash or sign-LSH signatures, perceptual
+   hashes. Normalization runs once per row in its own projection, and
+   the frame is persisted when more than one branch consumes it.
+2. **Block** — ``_two_phase_buckets`` collects each bucket's sorted
+   member array (LSH band, SimHash chunk, prefix gram, sign bucket)
+   with task-bounded buffers, dropping singleton and oversized
+   buckets. Pairs come from within buckets, not from a self-join: the
+   worst case is O(bucket²) per bucket, never O(n²).
+3. **Expand** — ``_bucket_pairs`` turns each member array into its
+   x-before-y pairs as one array column, optionally filtered per pair
+   before the explode (the size-ratio bound J ≤ min/max set sizes).
+4. **Verify** — the exact score on the candidates only:
+   ``_jaccard_verify`` for shingle/gram sets, Hamming distance for
+   SimHash and phash, cosine for embeddings.
 
-Downstream: ``dedup_clusters`` (min-label propagation with
+Tiers, each a different cost/recall point: exact (md5 fingerprint → one
+hash aggregate), MinHash + LSH (``minhash_dedup_pairs``), SimHash
+(``simhash_candidates``), prefix-filtered n-gram Jaccard
+(``ngram_jaccard_pairs``, exact scores, no signatures) and embedding
+cosine (``embedding_neardup_lsh``; brute-force variants for small-scale
+truth). Downstream: ``dedup_clusters`` (min-label propagation with
 localCheckpoint-ed rounds) assigns (member, cluster); ``dedup_retain``
 applies the assignment back to the corpus (canonical + singletons).
 
 Portability note: the exact-dedup fingerprint is md5-hex, so a DuckDB
-oracle reproduces it byte-identically. MinHash signatures use seeded
-xxhash64 (fast, JVM-native, engine-local) — fine, because the oracle
-for the LSH pipeline verifies the OUTPUT pairs with an exhaustive
-exact-Jaccard computation, not signature equality.
+oracle reproduces it byte-identically. MinHash signatures are
+engine-local (polynomial shingle hashes, affine hash families, xxhash64
+band keys) — fine, because the oracle for the LSH pipeline verifies the
+OUTPUT pairs with an exhaustive exact-Jaccard computation, not
+signature equality.
 """
 
 from __future__ import annotations
@@ -90,6 +93,85 @@ def _two_phase_buckets(
         )
         .filter((F.col("total") > 1) & (F.col("total") <= max_bucket))
         .select(*group_cols, "ms")
+    )
+
+
+def _bucket_pairs(ms: Column, emit, keep=None) -> Column:
+    """Flattened array of ``emit(x, y)`` for every member pair of the
+    sorted array ``ms`` with x before y — the in-bucket pair expansion
+    of every bucketed producer (no self-join; O(bucket²) per row).
+
+    ``keep(x, y)``, when given, drops a pair INSIDE the expansion,
+    before the caller explodes it: each pair is wrapped in
+    ``when(keep, …)`` and the NULLs are filtered out of the array. The
+    caller owns explode, distinct and any row filter."""
+
+    def row(x, i):
+        rest = F.slice(ms, i + 2, F.size(ms))
+        if keep is None:
+            return F.transform(rest, lambda y: emit(x, y))
+        return F.filter(
+            F.transform(rest, lambda y: F.when(keep(x, y), emit(x, y))),
+            lambda s: s.isNotNull(),
+        )
+
+    return F.flatten(F.transform(ms, row))
+
+
+def _pair_keys(x: Column, y: Column) -> Column:
+    return F.struct(x.getField("k").alias("a"), y.getField("k").alias("b"))
+
+
+def _size_ratio_keep(threshold: float):
+    """``keep`` predicate on members carrying their set size ``n``:
+    J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a size ratio below
+    ``threshold - 1e-6`` rules out J ≥ threshold — an exact-safe
+    prefilter (the margin covers the round-to-6 boundary). On
+    similarity-dense corpora it cuts the exploded pair count ~25×."""
+    ratio_min = threshold - 1e-6
+
+    def keep(x: Column, y: Column) -> Column:
+        nx = x.getField("n").cast("double")
+        ny = y.getField("n").cast("double")
+        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(ratio_min)
+
+    return keep
+
+
+def _pair_parts(df: DataFrame) -> int:
+    """Explicit partition count for per-pair work: pair and gram frames
+    are byte-small but expensive per row, so AQE's size-based
+    coalescing would serialize them onto 1-2 tasks (measured 86 s →
+    parallel at 2.6M pairs after an explicit repartition)."""
+    return max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
+
+
+def _jaccard(x: str, y: str) -> Column:
+    """Round-6 Jaccard of two distinct-element arrays (0.0 when both
+    are empty)."""
+    inter = F.size(F.array_intersect(x, y)).cast("double")
+    union = F.size(F.array_union(x, y)).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
+
+
+def _jaccard_verify(
+    pairs: DataFrame, sets_: DataFrame, arr_col: str, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``(a, b)`` against a
+    ``(k, arr_col)`` set frame → ``(a, b, jaccard)`` with jaccard ≥
+    threshold. The pair frame is repartitioned on ``a`` first
+    (``_pair_parts``), then joined to each side's set on its key."""
+    side = lambda key: sets_.select(  # noqa: E731
+        F.col("k").alias(key), F.col(arr_col).alias(f"{arr_col}_{key}")
+    )
+    j = (
+        pairs.repartition(_pair_parts(pairs), "a")
+        .join(side("a"), "a")
+        .join(side("b"), "b")
+    )
+    return (
+        j.select("a", "b", _jaccard(f"{arr_col}_a", f"{arr_col}_b").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -183,72 +265,6 @@ def drop_exact_duplicates(
 # ---------------------------------------------------------------------------
 # 2. MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text. Short texts
-    (< k chars) contribute their whole text as the single shingle so
-    they can still match exactly.
-
-    PERF: pass a plain column reference, not a computed expression —
-    the substr lambda re-evaluates its child PER ELEMENT under
-    interpreted eval, so an inline ``normalize_text(...)`` here costs
-    one regexp_replace per shingle. ``shingle_frame`` stages the
-    normalization in its own projection first; prefer it."""
-    t = text
-    n = F.length(t)
-    shingled = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(shingled)
-
-
-def shingle_frame(
-    df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, k: int = 5
-) -> DataFrame:
-    """(k: string-key, sh: array<string>) — normalized in one projection,
-    shingled in the next, so the regexp normalization runs once per row
-    (measured ~10× on 400-shingle docs; see char_shingles PERF note).
-    CollapseProject keeps the boundary: the normalized alias is
-    non-cheap and multiply-referenced."""
-    normed = df.select(
-        F.col(key_col).cast("string").alias("k"),
-        normalize_text(F.col(text_col)).alias("_t"),
-    )
-    # drop empty docs HERE, on the scalar column: a later
-    # filter(size(sh) > 0) would be predicate-pushed below this
-    # projection, substituting the full shingle expression into the
-    # lambda and re-evaluating the normalization per element
-    # (measured 5s → 35s on 1k docs)
-    normed = normed.filter(F.length("_t") > 0)
-    return normed.select("k", shingle_set_udf(k)(F.col("_t")).alias("sh"))
-
-
-def _hash_family(i: int):
-    """One-arg lambda factory. NOTE: ``lambda s, _i=i: ...`` would be
-    WRONG here — F.transform treats any 2-parameter callable (default
-    args included) as an (element, index) lambda."""
-    return lambda s: F.xxhash64(s, F.lit(i))
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 12) -> Column:
-    """array<long> of per-hash minima via pure Column expressions.
-
-    REFERENCE implementation only: higher-order-function lambdas are
-    interpreted (~4µs/eval), so 12 families × hundreds of shingles costs
-    ~20ms/doc — measured 20s per 1k docs. The production path is
-    ``minhash_sig_from_hashes_udf`` (vectorized numpy over Arrow batches,
-    ~100× faster); this expression form remains for tiny inputs and as
-    executable documentation of the semantics."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hash_family(i)))
-            for i in range(n_hashes)
-        ]
-    )
-
 
 # deterministic 64-bit hash constants (odd multipliers → bijective mod 2^64)
 _MH_BASE = 1099511628211  # FNV-64 prime
@@ -358,33 +374,22 @@ def shingle_hash_set_udf(k: int = 5):
 def hashed_shingle_frame(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id", *, k: int = 5
 ) -> DataFrame:
-    """(k, sh: array<long>) distinct shingle hashes — the verify-join
-    input (same staging rationale as shingle_frame)."""
+    """(k, sh: array<long>) distinct shingle hashes — the staged set
+    frame of the MinHash pipeline (banding and verify both read it).
+
+    Staging: the text is normalized in one projection and hashed in the
+    next, so the regexp normalization runs once per row (measured ~10×
+    on 400-shingle docs); CollapseProject keeps the boundary because the
+    normalized alias is non-cheap and multiply-referenced. Empty docs
+    are dropped HERE, on the scalar column: a later ``size(sh) > 0``
+    filter would be predicate-pushed below the shingling projection,
+    substituting the whole shingle expression and re-running the
+    normalization per element (measured 5 s → 35 s on 1k docs)."""
     normed = _fan_out(df).select(
         F.col(key_col).cast("string").alias("k"),
         normalize_text(F.col(text_col)).alias("_t"),
     ).filter(F.length("_t") > 0)
     return normed.select("k", shingle_hash_set_udf(k)(F.col("_t")).alias("sh"))
-
-
-def shingle_set_udf(k: int = 5):
-    """Vectorized distinct k-shingles: normalized text → array<string>.
-    Used by the exact-Jaccard verify join; same escape-hatch rationale
-    as minhash_sig_from_hashes_udf."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(t: pd.Series) -> pd.Series:
-        out = []
-        for s in t:
-            if not s:
-                out.append([])
-            elif len(s) < k:
-                out.append([s])
-            else:
-                out.append(list({s[i : i + k] for i in range(len(s) - k + 1)}))
-        return pd.Series(out)
-
-    return _sh
 
 
 def band_signatures(sig: Column, n_bands: int = 6, rows_per_band: int = 2) -> Column:
@@ -400,164 +405,21 @@ def band_signatures(sig: Column, n_bands: int = 6, rows_per_band: int = 2) -> Co
     )
 
 
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    *,
-    k: int = 5,
-    n_hashes: int = 12,
-    n_bands: int = 6,
-    max_bucket: int = 1000,
-    size_ratio_min: float | None = None,
-) -> DataFrame:
-    """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b —
-    convenience wrapper that stages the hashed-shingle frame itself.
-    ``minhash_dedup_pairs`` stages the frame ONCE and calls
-    ``minhash_candidates_from_sets`` directly so the verify join shares
-    the same scan."""
-    sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
-    return minhash_candidates_from_sets(
-        sets_, n_hashes=n_hashes, n_bands=n_bands,
-        max_bucket=max_bucket, size_ratio_min=size_ratio_min,
-    )
-
-
-def minhash_candidates_from_sets(
-    sets_: DataFrame,
-    *,
-    n_hashes: int = 12,
-    n_bands: int = 6,
-    max_bucket: int = 1000,
-    size_ratio_min: float | None = None,
-) -> DataFrame:
-    """Candidate pairs (a, b) sharing ≥1 LSH band bucket, a < b, from a
-    staged ``(k, sh: array<long>)`` hashed-shingle frame.
-
-    Pairs are generated WITHIN buckets via collect_list + array pair
-    expansion — no self-join, no O(n²). ``max_bucket`` guards degenerate
-    buckets (e.g. empty docs): oversized buckets are dropped here; the
-    exact-dedup pass catches their members anyway.
-
-    ``size_ratio_min``: when set, pairs whose DISTINCT-shingle-count
-    ratio is below it are dropped INSIDE the pair expansion, before the
-    explode — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so for a verify
-    threshold t this is an exact-safe prefilter (pass t·(1-ε)). On
-    similarity-dense corpora it cuts the exploded pair count ~25×.
-    """
-    rows_per_band = n_hashes // n_bands
+def _minhash_bands(sets_: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
+    """(k, n, band, bsig) — one row per (doc, band) of a staged
+    ``(k, sh)`` frame: MinHash signature, ``band_signatures``, then
+    posexplode. ``n`` is the distinct-shingle count the size-ratio
+    prefilters read. The band array is exploded inline, not staged in
+    a column: a named array column lets Catalyst infer a
+    ``size(bands) > 0`` filter below the explode, which re-evaluates
+    the signature UDF for that filter alone."""
     sig = sets_.filter(F.size("sh") > 0).select(
         "k",
         F.size("sh").cast("long").alias("n"),
         minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
     )
-    banded = sig.select(
-        "k", "n", band_signatures(F.col("sig"), n_bands, rows_per_band).alias("bands")
-    )
-    exploded = banded.select("k", "n", F.posexplode("bands").alias("band", "bsig"))
-    # bounded hot-bucket collection — one row per (k, band), unique
-    buckets = _two_phase_buckets(
-        exploded, ["band", "bsig"], F.struct("k", "n"), max_bucket
-    )
-
-    def pair_ok(x, y):
-        if size_ratio_min is None:
-            return F.lit(True)
-        nx = x.getField("n").cast("double")
-        ny = y.getField("n").cast("double")
-        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(size_ratio_min)
-
-    # all ordered pairs within a bucket, size-ratio-filtered pre-explode
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                            lambda y: F.when(
-                                pair_ok(x, y),
-                                F.struct(
-                                    x.getField("k").alias("a"),
-                                    y.getField("k").alias("b"),
-                                ),
-                            ),
-                        ),
-                        lambda s: s.isNotNull(),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b")).distinct()
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    *,
-    k: int = 5,
-    threshold: float = 0.7,
-    prefilter: bool = True,
-    hashed: bool = True,
-    sets_: DataFrame | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs → (a, b, jaccard).
-
-    Two scale guards (dense corpora produce millions of candidates):
-
-    1. **Size-ratio prefilter** — J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so
-       pairs whose shingle-set sizes differ too much are dropped with an
-       integer compare before any array materializes. Exact (zero false
-       negatives; 1e-6 margin covers the round-to-6 boundary).
-    2. **Explicit repartition of the pair frame** — candidate pairs are
-       tiny in bytes, so AQE coalesces them into 1-2 partitions and the
-       expensive per-pair array intersection runs nearly serial
-       (measured 86s → parallel after repartition at 2.6M pairs).
-
-    ``prefilter=False`` skips guard 1 (use when the candidate generator
-    already applied it — minhash_dedup_pairs does, inside the bucket
-    pair expansion). ``hashed=True`` intersects distinct shingle HASHES
-    (array<long>) instead of shingle strings — same Jaccard up to
-    negligible 64-bit collisions, far cheaper to move and compare.
-    ``sets_``: a pre-staged (k, sh) frame — pass the SAME (persisted)
-    frame the candidate generator consumed to avoid a second corpus
-    scan + normalization pass.
-    """
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-    if sets_ is None:
-        if hashed:
-            sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
-        else:
-            sets_ = shingle_frame(df, text_col, key_col, k=k)
-    pre = candidates.repartition(n_parts, "a")
-    if prefilter:
-        sizes = sets_.select("k", F.size("sh").alias("n"))
-        pre = (
-            pre
-            .join(F.broadcast(sizes.select(F.col("k").alias("a"), F.col("n").alias("na"))), "a")
-            .join(F.broadcast(sizes.select(F.col("k").alias("b"), F.col("n").alias("nb"))), "b")
-            .filter(
-                F.least("na", "nb").cast("double") / F.greatest("na", "nb")
-                >= threshold - 1e-6
-            )
-            .select("a", "b")
-            .repartition(n_parts, "a")
-        )
-    a = sets_.select(F.col("k").alias("a"), F.col("sh").alias("sh_a"))
-    b = sets_.select(F.col("k").alias("b"), F.col("sh").alias("sh_b"))
-    j = pre.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    bands = band_signatures(F.col("sig"), n_bands, n_hashes // n_bands)
+    return sig.select("k", "n", F.posexplode(bands).alias("band", "bsig"))
 
 
 def minhash_dedup_pairs(
@@ -571,7 +433,19 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """Full near-dup pipeline: LSH candidates → exact-Jaccard ≥ threshold.
+    """Full near-dup pipeline → (a, b, jaccard), a < b, every pair
+    sharing ≥1 LSH band bucket whose exact hashed-shingle Jaccard is ≥
+    threshold.
+
+    Candidates come from within buckets (``_two_phase_buckets`` +
+    ``_bucket_pairs``) — no self-join, no O(n²). ``max_bucket`` guards
+    degenerate buckets (e.g. boilerplate): oversized buckets are
+    dropped; the exact-dedup pass catches their members anyway. The
+    size-ratio bound (J ≤ min/max set sizes) drops pairs inside the
+    expansion, before the explode, and ``_jaccard_verify`` scores the
+    rest on distinct shingle HASHES (array<long>) — the same Jaccard
+    up to negligible 64-bit collisions, far cheaper to move and compare
+    than strings.
 
     SINGLE-SCAN: the corpus is normalized + shingle-hashed exactly once
     into a persisted ``(k, sh)`` frame (MEMORY_AND_DISK — spills, never
@@ -593,14 +467,18 @@ def minhash_dedup_pairs(
     sets_ = hashed_shingle_frame(df, text_col, key_col, k=k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    cands = minhash_candidates_from_sets(
-        sets_, n_hashes=n_hashes, n_bands=n_bands,
-        max_bucket=max_bucket, size_ratio_min=threshold - 1e-6,
+    # bounded hot-bucket collection — one row per (k, band), unique
+    buckets = _two_phase_buckets(
+        _minhash_bands(sets_, n_hashes, n_bands),
+        ["band", "bsig"],
+        F.struct("k", "n"),
+        max_bucket,
     )
-    return jaccard_pairs(
-        df, cands, text_col, key_col, k=k, threshold=threshold,
-        prefilter=False, sets_=sets_,
-    )
+    keep = _size_ratio_keep(threshold)
+    pairs = buckets.select(
+        F.explode(_bucket_pairs(F.col("ms"), _pair_keys, keep)).alias("p")
+    ).select("p.a", "p.b").distinct()
+    return _jaccard_verify(pairs, sets_, "sh", threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -613,8 +491,9 @@ def word_ngram_frame(
     """(k, grams: array<string>) — DISTINCT word n-grams of the
     normalized text; docs shorter than n tokens contribute their whole
     token sequence as the single gram (short exact dups still match).
-    Normalization staged in its own projection (shingle_frame PERF
-    note applies verbatim)."""
+    Normalization is staged in its own projection and empty docs are
+    dropped on the scalar column before tokenizing (the staging note
+    on ``hashed_shingle_frame`` applies verbatim)."""
     normed = _fan_out(df).select(
         F.col(key_col).cast("string").alias("k"),
         normalize_text(F.col(text_col)).alias("_t"),
@@ -670,12 +549,10 @@ def ngram_jaccard_pairs(
     (pre-ordering, ANY popular trigram in a short doc's prefix did).
     Raise ``max_bucket`` for a strict-recall run.
 
-    The verify stage reuses jaccard_pairs' scale guards: in-bucket pair
-    expansion (no self-join) capped at ``max_bucket``, size-ratio
-    prefilter applied pre-explode (J ≤ min/max set sizes), explicit
-    repartition before the per-pair array intersection (AQE would
-    coalesce the tiny pair frame and serialize the expensive step), and
-    hashed-gram intersection (array<long>, not strings).
+    Pairs and verify are the MinHash pipeline's: in-bucket pair
+    expansion (no self-join) capped at ``max_bucket``, the size-ratio
+    prefilter applied pre-explode (J ≤ min/max set sizes), and
+    ``_jaccard_verify`` on hashed grams (array<long>, not strings).
     """
     sets_ = word_ngram_frame(df, text_col, key_col, n=n)
     return gram_set_jaccard_pairs(
@@ -718,8 +595,7 @@ def gram_set_jaccard_pairs(
     # 1-2 tasks (the q16 candidate-pair lesson, BENCH.md §5) — an
     # explicit repartition(n, "g") also makes the freq aggregate AND
     # the join reuse one exchange (co-partitioned, zero extra shuffle).
-    spark = sets_.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+    n_parts = _pair_parts(sets_)
     grams_doc = hashed.select(
         "k", F.size("gh").alias("n"), F.explode("gh").alias("g")
     ).repartition(n_parts, "g")
@@ -742,47 +618,11 @@ def gram_set_jaccard_pairs(
     buckets = _two_phase_buckets(
         prefixed, ["g"], F.struct("k", "n"), max_bucket
     )
-    ratio_min = threshold - 1e-6
-
-    def pair_ok(x, y):
-        nx = x.getField("n").cast("double")
-        ny = y.getField("n").cast("double")
-        return F.least(nx, ny) / F.greatest(nx, ny) >= F.lit(ratio_min)
-
+    keep = _size_ratio_keep(threshold)
     pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.filter(
-                        F.transform(
-                            F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                            lambda y: F.when(
-                                pair_ok(x, y),
-                                F.struct(
-                                    x.getField("k").alias("a"),
-                                    y.getField("k").alias("b"),
-                                ),
-                            ),
-                        ),
-                        lambda s: s.isNotNull(),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(_bucket_pairs(F.col("ms"), _pair_keys, keep)).alias("p")
     ).select("p.a", "p.b").distinct()
-
-    pre = pairs.repartition(n_parts, "a")
-    a = hashed.select(F.col("k").alias("a"), F.col("gh").alias("gh_a"))
-    b = hashed.select(F.col("k").alias("b"), F.col("gh").alias("gh_b"))
-    j = pre.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("gh_a", "gh_b")).cast("double")
-    union = F.size(F.array_union("gh_a", "gh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        j.select("a", "b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(pairs, hashed, "gh", threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -817,6 +657,11 @@ def dedup_clusters(
     slow-converging graph cannot walk into plan-size blowup (cache()
     alone would NOT do this — it truncates execution, not the plan).
     Cluster id = min member key.
+
+    Initialization already runs the first propagation round (the node
+    set's groupBy carries each node's min neighbor), so ``max_iter``
+    bounds the REMAINING rounds — at most ``max_iter + 1`` in total —
+    and ``max_iter=0`` returns the round-1 labels.
 
     Fixed point is detected with a changed-label count — deterministic,
     independent of partitioning. For adversarially long chains switch
@@ -979,23 +824,14 @@ def simhash_candidates(
     buckets = _two_phase_buckets(
         chunks, ["chunk", "val"], F.struct("k", "sig"), max_bucket
     )
+    sig_pair = lambda x, y: F.struct(  # noqa: E731
+        x.getField("k").alias("a"),
+        y.getField("k").alias("b"),
+        x.getField("sig").alias("sa"),
+        y.getField("sig").alias("sb"),
+    )
     pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                        lambda y: F.struct(
-                            x.getField("k").alias("a"),
-                            y.getField("k").alias("b"),
-                            x.getField("sig").alias("sa"),
-                            y.getField("sig").alias("sb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(_bucket_pairs(F.col("ms"), sig_pair)).alias("p")
     ).select("p.a", "p.b", "p.sa", "p.sb").distinct()
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     return (
@@ -1050,6 +886,11 @@ def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
+# vectors embedding_pair_cos may collect to the driver (~50 MB at
+# dim 64); the LSH path has no such bound
+_PAIR_COS_MAX_ROWS = 100_000
+
+
 def embedding_pair_cos(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1087,16 +928,27 @@ def embedding_pair_cos(
     Contract: ``dim`` is the caller's guarantee that every vector is
     exactly that length with finite, non-null elements (both report
     queries pre-filter exactly this); the kernel is undefined on
-    unvalidated frames — use the fold path / LSH for those."""
+    unvalidated frames — use the fold path / LSH for those.
+
+    The driver collect is capped at ``_PAIR_COS_MAX_ROWS`` vectors: a
+    larger input raises ``ValueError`` before anything beyond the cap
+    reaches the driver."""
     import numpy as np
 
     spark = df.sparkSession
     kt = df.schema[key_col].dataType.simpleString()
     out_schema = f"a {kt}, b {kt}, cos double"
+    cap = _PAIR_COS_MAX_ROWS
     pdf = df.select(
         F.col(key_col).alias("k"), F.col(vec_col).alias("v")
-    ).toPandas()
+    ).limit(cap + 1).toPandas()
     n = len(pdf)
+    if n > cap:
+        raise ValueError(
+            f"embedding_pair_cos: more than {cap} vectors — the exhaustive"
+            " scorer collects every vector to the driver; use"
+            " embedding_neardup_lsh at this scale"
+        )
     if n < 2:
         return spark.createDataFrame([], out_schema)
     keys = pdf["k"].to_numpy()
@@ -1372,23 +1224,14 @@ def embedding_neardup_lsh(
             .mapInPandas(verify, schema=f"a {kt}, b {kt}")
             .distinct()
         )
+    vec_pair = lambda x, y: F.struct(  # noqa: E731
+        F.least(x.getField("k"), y.getField("k")).alias("a"),
+        F.greatest(x.getField("k"), y.getField("k")).alias("b"),
+        x.getField("vec").alias("va"),
+        y.getField("vec").alias("vb"),
+    )
     pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                        lambda y: F.struct(
-                            F.least(x.getField("k"), y.getField("k")).alias("a"),
-                            F.greatest(x.getField("k"), y.getField("k")).alias("b"),
-                            x.getField("vec").alias("va"),
-                            y.getField("vec").alias("vb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(_bucket_pairs(F.col("ms"), vec_pair)).alias("p")
     ).select("p.a", "p.b", "p.va", "p.vb")
     # in-bucket verify: inferred dim keeps the ragged-safe fold
     sim = cosine_sim(F.col("va"), F.col("vb"), None)
@@ -1739,20 +1582,8 @@ def minhash_index_bands(
     """
     from pyspark.sql import Window
 
-    rows_per_band = n_hashes // n_bands
     sets_ = hashed_shingle_frame(df, text_col, key_col, k=k)
-    sig = sets_.filter(F.size("sh") > 0).select(
-        "k",
-        F.size("sh").cast("long").alias("n"),
-        minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
-    )
-    exploded = sig.select(
-        "k", "n",
-        F.posexplode(
-            band_signatures(F.col("sig"), n_bands, rows_per_band)
-        ).alias("band", "bsig"),
-    )
-    return exploded.withColumn(
+    return _minhash_bands(sets_, n_hashes, n_bands).withColumn(
         "bucket_n",
         F.count(F.lit(1)).over(Window.partitionBy("band", "bsig")).cast("long"),
     )
@@ -1803,21 +1634,11 @@ def incremental_minhash_neardup(
     """
     from pyspark.storagelevel import StorageLevel
 
-    rows_per_band = n_hashes // n_bands
     bstaged = hashed_shingle_frame(batch, text_col, key_col, k=k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    bsig = bstaged.filter(F.size("sh") > 0).select(
-        "k",
-        F.size("sh").cast("long").alias("n"),
-        minhash_sig_from_hashes_udf(n_hashes)(F.col("sh")).alias("sig"),
-    )
-    bexp = bsig.select(
-        F.col("k").alias("bk"),
-        F.col("n").alias("bn"),
-        F.posexplode(
-            band_signatures(F.col("sig"), n_bands, rows_per_band)
-        ).alias("band", "bsig"),
+    bexp = _minhash_bands(bstaged, n_hashes, n_bands).select(
+        F.col("k").alias("bk"), F.col("n").alias("bn"), "band", "bsig"
     )
     if broadcast_batch:
         bexp = F.broadcast(bexp)
@@ -1845,16 +1666,11 @@ def incremental_minhash_neardup(
             "bk",
         )
     )
-    inter = F.size(F.array_intersect("sh_b", "sh_i")).cast("double")
-    union = F.size(F.array_union("sh_b", "sh_i")).cast("double")
-    jac = F.round(
-        F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-    )
     return (
         verify.select(
             F.col("bk").alias("k"),
             F.col("ik").alias("index_key"),
-            jac.alias("jaccard"),
+            _jaccard("sh_b", "sh_i").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -2493,8 +2309,7 @@ def containment_pairs(
             F.array_distinct(F.transform("grams", lambda g: F.xxhash64(g)))
         ).alias("gh"),
     ).persist()
-    spark = df.sparkSession
-    n_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+    n_parts = _pair_parts(df)
     grams_doc = hashed.select(
         "k", F.size("gh").alias("n"), F.explode("gh").alias("g")
     ).repartition(n_parts, "g")
@@ -2593,15 +2408,14 @@ def cross_source_dup_matrix(
     per_fp = fs.groupBy("_fp").agg(
         F.sort_array(F.collect_list(F.struct("_src", "_n"))).alias("_ss")
     )
+    src_pair = lambda x, y: F.struct(  # noqa: E731
+        x.getField("_src").alias("sa"),
+        y.getField("_src").alias("sb"),
+        x.getField("_n").alias("na"),
+        y.getField("_n").alias("nb"),
+    )
     pairs = per_fp.filter(F.size("_ss") >= 2).select(
-        F.explode(
-            F.expr(
-                "flatten(transform(_ss, (x, i) -> "
-                "transform(slice(_ss, i + 2, size(_ss)), "
-                "y -> struct(x._src AS sa, y._src AS sb, "
-                "x._n AS na, y._n AS nb))))"
-            )
-        ).alias("_p")
+        F.explode(_bucket_pairs(F.col("_ss"), src_pair)).alias("_p")
     )
     return pairs.groupBy(
         F.col("_p.sa").alias("source_a"), F.col("_p.sb").alias("source_b")

@@ -1198,7 +1198,7 @@ def basket_pairs(
 
     Output: (item_a, item_b, c_ab, c_a, c_b, n_baskets, lift).
     """
-    from validate_spark.operators.dedup import _two_phase_buckets
+    from validate_spark.operators.dedup import _bucket_pairs, _two_phase_buckets
 
     bi = (
         lineitem.select(
@@ -1216,14 +1216,9 @@ def basket_pairs(
     buckets = _two_phase_buckets(
         bi_kept, ["_b"], F.col("_i"), max_bucket=max_basket
     )
+    item_pair = lambda x, y: F.struct(x.alias("a"), y.alias("b"))  # noqa: E731
     pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ms, (x, i) -> "
-                "transform(slice(ms, i + 2, size(ms)), "
-                "y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("_p")
+        F.explode(_bucket_pairs(F.col("ms"), item_pair)).alias("_p")
     ).select(F.col("_p.a").alias("item_a"), F.col("_p.b").alias("item_b"))
     c_ab = pairs.groupBy("item_a", "item_b").agg(
         F.count(F.lit(1)).cast("long").alias("c_ab")

@@ -227,7 +227,7 @@ def annotate_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     signal column re-splits — measured 1.2 s → 0.7 s at 600k docs), and
     the input is fanned out to cluster parallelism first (a 1-partition
     parquet scan otherwise runs the whole projection on one core —
-    measured 12.5 s → 1.2 s; the shingle_frame lesson again)."""
+    measured 12.5 s → 1.2 s; the hashed_shingle_frame lesson again)."""
     from validate_spark.session import fan_out
 
     t = F.trim(F.coalesce(F.col(text_col), F.lit("")))

@@ -138,7 +138,7 @@ def parse_query_column(
     # stage the entries array in its OWN projection: the per-field
     # lookups below reference it multiple times, and a non-cheap,
     # multiply-referenced alias is exactly what CollapseProject keeps
-    # staged (same PERF boundary as shingle_frame)
+    # staged (same PERF boundary as hashed_shingle_frame)
     staged = df.withColumn(ecol, query_entries(F.col(query_col)))
     lookup = _entries_lookup(F.col(ecol))
     return staged.withColumn(out_col, _struct_from_keys(lookup, fields)).drop(ecol)
